@@ -82,24 +82,20 @@ def upsert_compacted(target: DataFrame, latest: DataFrame, keys: list[str],
                      op_col: str = "op",
                      routed: DataFrame | None = None) -> DataFrame:
     """The merge half of ``apply_changes`` over an ALREADY-compacted
-    (one row per key) batch. Mirror apply paths that persist the
-    compacted batch up front (versioned/bucketed/specs) call this
-    directly so the batch's window shuffle runs once, not re-planned
-    inside every merge (the old shape passed the compacted batch back
-    through ``apply_changes``, which re-ran ``compact_latest`` on it —
-    an identity, but a second batch-sized Exchange+Sort per commit).
+    (one row per key) batch. Mirror apply paths hold the compacted
+    batch as a persisted ``PreparedBatch`` and call this directly, so
+    the batch's window shuffle runs once, not re-planned inside every
+    merge.
 
     ``routed``: an optional re-layout of the SAME batch rows (e.g.
     repartitioned by bucket for the staged write). Only the appended
     upsert images are drawn from it; the anti-join's broadcast side
     stays on ``latest`` so building the broadcast never executes the
     routing exchange. With ``routed`` the anti-join's batch side is
-    broadcast EXPLICITLY (r21, ADVICE item): the staged-write callers'
-    "survivors never shuffle" invariant relied on AQE size estimation,
-    and a batch above the broadcast threshold would silently degrade
-    to a sort-merge join — shuffling the full survivor leg and making
-    the ``routed`` re-layout redundant. Those callers persist the
-    compacted batch up front (cdc/versioned.py ``_prepare_batch``), so
+    broadcast EXPLICITLY: the staged-write callers rely on survivors
+    never shuffling, and a batch above the broadcast threshold would
+    otherwise degrade to a sort-merge join that shuffles the full
+    survivor leg. Those callers pass a persisted ``PreparedBatch``, so
     the broadcast is of a bounded, already-materialized relation.
     Without ``routed`` (the generic ``apply_changes`` path, where no
     caller has bounded the batch) the planner keeps the choice."""
@@ -117,6 +113,73 @@ def upsert_compacted(target: DataFrame, latest: DataFrame, keys: list[str],
     src = latest if routed is None else routed
     upserts = src.filter(F.col(op_col) != "d").select(*target.columns)
     return survivors.unionByName(upserts)
+
+
+class PreparedBatch:
+    """A change batch compacted to latest-wins form and persisted, plus
+    the touched sets the mirrors derive from it.
+
+    The only place the mirror write paths call ``compact_latest``: the
+    window shuffle runs once per batch, and every merge, conflict retry
+    and ref-CAS retry reads cache blocks. ``touched(*cols)`` collects
+    the distinct values of a bucket or partition expression once per
+    expression (at most |batch dates| x n_buckets rows, a driver-safe
+    collect); the first call is the action that fills the cache.
+
+    Ownership: ``apply(prepared=h)`` consumes ``h`` and releases it
+    whether the commit lands or raises; a ``with`` block releases a
+    handle that never reached ``apply``. ``release()`` is idempotent.
+    persist, not localCheckpoint: only a persisted relation can be
+    freed the moment its commit lands, and an evicted block recomputes
+    from lineage instead of failing."""
+
+    def __init__(self, changes: DataFrame, keys: list[str],
+                 order_cols: list[str] = ("ts_ms", "off")):
+        self.df = compact_latest(changes, keys, order_cols).persist()
+        self._touched: dict[tuple[str, ...], set] = {}
+        self._released = False
+
+    @classmethod
+    def of(cls, changes: DataFrame | None, prepared: PreparedBatch | None,
+           keys: list[str], order_cols: list[str]) -> PreparedBatch:
+        """``prepared`` if given (``changes`` is then ignored), else a
+        lazy batch over ``changes``."""
+        if prepared is not None:
+            return prepared
+        if changes is None:
+            raise ValueError("apply needs changes or prepared")
+        return cls(changes, keys, order_cols)
+
+    def touched(self, *cols) -> set:
+        """Distinct values of ``cols`` over the batch: scalars for one
+        column, tuples for several."""
+        key = tuple(str(c) for c in cols)
+        if key not in self._touched:
+            rows = self.df.select(*cols).distinct().collect()
+            self._touched[key] = {
+                r[0] if len(cols) == 1 else tuple(r) for r in rows}
+        return self._touched[key]
+
+    def materialize(self, *cols) -> PreparedBatch:
+        """Fill the cache with ``touched(*cols)`` as the action;
+        releases the batch if that job fails."""
+        try:
+            self.touched(*cols)
+        except BaseException:
+            self.release()
+            raise
+        return self
+
+    def release(self) -> None:
+        if not self._released:
+            self._released = True
+            self.df.unpersist()
+
+    def __enter__(self) -> PreparedBatch:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
 
 
 def mirror_diff(mirror: DataFrame, expected: DataFrame) -> DataFrame:

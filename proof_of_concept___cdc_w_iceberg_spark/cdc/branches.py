@@ -22,7 +22,7 @@ mechanism is rebuilt on SnapshotMirror's manifest ledger:
   exclusive create (os.link) with collision retry and keys data dirs
   by a per-writer uniquifier, so two branches committing at the same
   instant win distinct versions instead of silently overwriting one
-  manifest (review finding);
+  manifest;
 - publish = fast-forward: ``main`` adopts the audited branch's head
   version — no data is rewritten, the commit was already durable;
 - branch-aware expiry: a snapshot any ref points at is never expired,
@@ -44,6 +44,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..obs import overlap
+from .apply import PreparedBatch
 from .versioned import CommitConflictError, SnapshotMirror
 
 MAIN = "main"
@@ -85,13 +87,11 @@ class BranchedMirror(SnapshotMirror):
         late opener lock a ghost inode while a new opener locks the
         fresh one, two 'exclusive' holders at once).
 
-        flock replaces the old exclusive-create + mtime-stale-break
-        protocol, which had an unfixable TOCTOU (review finding r16):
-        the staleness check and the break could not be made atomic
-        against a concurrent fresh acquire, so a breaker could destroy
-        a LIVE holder's lock and let two writers into the CAS section.
-        A kernel advisory lock needs no staleness heuristic at all — a
-        crashed holder's lock is released by the kernel with the fd.
+        A kernel advisory lock needs no staleness heuristic: a crashed
+        holder's lock is released by the kernel with the fd. (An
+        exclusive-create file plus an mtime stale-break cannot be made
+        atomic against a concurrent fresh acquire, so a breaker could
+        destroy a LIVE holder's lock.)
         The ledger is a local-filesystem mirror (every registered
         query builds under a local tmp dir), so flock's single-host
         semantics are the deployment contract; a shared-filesystem
@@ -136,13 +136,12 @@ class BranchedMirror(SnapshotMirror):
         refused instead of silently orphaning the winner's commit from
         the branch head). ``create_only`` refuses an EXISTING ref
         inside the same critical section (branch_create's double-create
-        race: two concurrent creates of one name used to both pass the
+        race: two concurrent creates of one name must not both pass the
         pre-check and silently clobber each other).
 
-        EVERY write path holds the ref's flock — the old code skipped
-        the lock when ``expect`` was None, so a plain write could land
-        between a CAS holder's read and write and be silently
-        overwritten (review finding r16)."""
+        EVERY write path holds the ref's flock, including plain writes
+        (``expect=None``): otherwise a plain write could land between a
+        CAS holder's read and write and be silently overwritten."""
         if version not in self.versions():
             raise ValueError(f"no snapshot v{version} to point {name!r} at")
         with self._ref_lock(name):
@@ -160,10 +159,9 @@ class BranchedMirror(SnapshotMirror):
             self._write_ref(name, version)
 
     def _write_ref(self, name: str, version: int) -> None:
-        # Writer-unique tmp name: a FIXED '.tmp' let two concurrent
-        # plain writers truncate each other's half-written staging file
-        # and publish torn JSON (review finding r16). os.replace stays
-        # the atomic commit point.
+        # Writer-unique tmp name: with a fixed one, two concurrent
+        # writers truncate each other's staging file and publish torn
+        # JSON. os.replace stays the atomic commit point.
         tmp = (f"{self._ref_path(name)}.tmp.{os.getpid()}."
                f"{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
@@ -180,16 +178,16 @@ class BranchedMirror(SnapshotMirror):
     def branch_create(self, name: str, from_ref: str = MAIN) -> int:
         """Create a NEW ref. Refuses to clobber an existing one —
         moving main (or any live branch) must go through the audited
-        fast_forward path, never through a create (review finding:
-        branch_create('main', from_ref=<unaudited>) would otherwise
+        fast_forward path, never through a create
+        (branch_create('main', from_ref=<unaudited>) would otherwise
         silently republish). The existence check runs INSIDE the ref's
         critical section (``create_only``), so two concurrent creates
         of one name serialize: one wins, the other gets the refusal
-        instead of a silent clobber (review finding r16)."""
+        instead of a silent clobber."""
         # One read, exception-mapped — not refs()-then-get_ref: a
         # concurrent drop_branch between the membership check and the
         # read would leak a raw FileNotFoundError past the documented
-        # ValueError contract (r16 advice).
+        # ValueError contract.
         try:
             v = self.get_ref(from_ref)
         except FileNotFoundError:
@@ -210,7 +208,7 @@ class BranchedMirror(SnapshotMirror):
 
     def apply(self, changes: DataFrame | None = None, op_col: str = "op",
               base_version: int | None = None, max_retries: int = 5,
-              prepared=None) -> int:
+              prepared: PreparedBatch | None = None) -> int:
         """Unqualified apply = commit on main's head and advance main
         (the un-branched SnapshotMirror behavior, ref-tracked)."""
         if base_version is not None:
@@ -222,60 +220,46 @@ class BranchedMirror(SnapshotMirror):
                                   prepared=prepared)
 
     def apply_to_branch(self, name: str, changes: DataFrame | None = None,
-                        op_col: str = "op", prepared=None) -> int:
+                        op_col: str = "op",
+                        prepared: PreparedBatch | None = None) -> int:
         """Commit a batch on the BRANCH head and advance only that
-        ref — main and sibling branches are isolated. ``prepared``:
-        a ``prepare`` handle whose compaction job already ran
-        (overlappable with init/other branches — r21, guide §2.6)."""
+        ref — main and sibling branches are isolated. ``prepared``: a
+        ``prepare`` handle (overlappable with init or other branches),
+        consumed as in ``SnapshotMirror.apply``."""
         return self._apply_to_ref(name, changes, op_col=op_col,
                                   prepared=prepared)
 
     def _apply_to_ref(self, name: str, changes: DataFrame | None,
                       op_col: str = "op", max_retries: int = 5,
-                      prepared=None) -> int:
+                      prepared: PreparedBatch | None = None) -> int:
         """The ref-level optimistic-concurrency loop: merge from the
         ref's CURRENT head, commit the snapshot (version allocation is
         collision-safe one level down), then CAS the ref forward. If
         the ref moved underneath the merge, the committed snapshot is
         abandoned (expirable garbage — its data was never adopted) and
         the merge re-runs from the NEW head, so two writers advancing
-        one branch serialize instead of losing the first's batch."""
+        one branch serialize instead of losing the first's batch.
+        Every retry re-merges from the same prepared batch."""
         if max_retries < 1:
             raise ValueError("max_retries must be >= 1")
         last: CommitConflictError | None = None
-        # Prepared (and MATERIALIZED — _prepare_batch persists the
-        # compacted batch) once: a CAS retry re-merges from the new
-        # head but never re-runs the batch-compaction job, because the
-        # retry's plan reads cache blocks, not the lazy compaction
-        # (r16 advice: the hoist alone left ``latest`` lazy, so each
-        # retry's apply_changes still re-executed compact_latest).
-        # Released in the finally — this loop is _prepare_batch's only
-        # caller besides apply(), and both own their batch's lifetime
-        # (r17 advice: checkpoint blocks leaked until ContextCleaner).
-        if prepared is None:
-            if changes is None:
-                raise ValueError("apply needs changes or prepared")
-            prepared = self._prepare_batch(changes)
-        latest, touched = prepared
-        try:
+        with PreparedBatch.of(changes, prepared, self.keys,
+                              self.order_cols) as batch:
             for _ in range(max_retries):
                 base = self.get_ref(name)
-                v = self._apply_prepared(latest, touched, op_col=op_col,
-                                         base_version=base)
+                v = self._rewrite(batch, op_col=op_col, base_version=base)
                 try:
                     self.set_ref(name, v, expect=base)
                     return v
                 except CommitConflictError as e:
                     last = e  # v orphaned; re-merge from the new head
             raise last
-        finally:
-            latest.unpersist()
 
     def fast_forward(self, to_ref: str, from_ref: str) -> int:
         """Publish: point ``to_ref`` at ``from_ref``'s head. No data
         moves — the audited snapshot was already durable.
 
-        Guarded like Iceberg's fast_forward (review advice): ``to_ref``
+        Guarded like Iceberg's fast_forward: ``to_ref``
         must already EXIST (publishing cannot conjure refs — that's
         branch_create's job), and its current head must be an ANCESTOR
         of the source head on the manifest lineage. Without the check,
@@ -291,7 +275,7 @@ class BranchedMirror(SnapshotMirror):
         if from_ref not in refs:
             # Same refusal contract as the target guard — a typo'd
             # source must not leak a raw FileNotFoundError past callers
-            # handling the documented ValueError (review finding r16).
+            # handling the documented ValueError.
             raise ValueError(
                 f"fast_forward source ref {from_ref!r} does not exist")
         cur = self.get_ref(to_ref)
@@ -342,7 +326,7 @@ def wap_audit(state: DataFrame, keys: list[str],
     keys. At 100 TB each pass reads only the branch's buckets via the
     manifest, like any snapshot read.
 
-    r20 note (measured, kept as-is): a single-pass rewrite (broadcast
+    A single-pass rewrite (broadcast
     LEFT-join presence flag + one full-state groupBy feeding both
     counts) is ~1.3x SLOWER here — the scalar null aggregate is
     map-combined with no shuffle, and the semi-join reduces the dup
@@ -357,21 +341,9 @@ def wap_audit(state: DataFrame, keys: list[str],
     if batch_keys is not None:
         scope = state.join(F.broadcast(batch_keys.select(*keys).distinct()),
                            on=keys, how="left_semi")
-    # r20 (guide §2.6): the two passes are independent ACTIONS over the
-    # same branch scan — overlapping them from two driver threads lets
-    # the dup pass's tasks back-fill executors the null pass's tail
-    # frees (at sf0.1 each pass is a short wide stage; serial they pay
-    # two full job latencies). Two passes stay two passes — the
-    # one-pass rewrite was measured slower (note above).
-    # Thread-local caveat (r21, ADVICE item): under PySpark's default
-    # pinned-thread mode, fresh executor threads do NOT inherit the
-    # caller's JVM local properties — a caller-set job group /
-    # scheduler pool is silently absent for these jobs (cancellation
-    # and fair-scheduling scope only; results are unaffected). A
-    # harness that sets job groups should submit via
-    # pyspark.inheritable_thread_target instead.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # The two passes are independent actions over the same branch
+    # scan, so they overlap: the dup pass's tasks back-fill executors
+    # the null pass's tail frees.
     def _nulls() -> int:
         row = state.agg(
             F.sum(F.when(null_pred, 1).otherwise(0)).alias("null_keys")
@@ -384,6 +356,5 @@ def wap_audit(state: DataFrame, keys: list[str],
             .filter(F.col("n") > 1).count()
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fn, fd = pool.submit(_nulls), pool.submit(_dups)
-        return {"null_keys": fn.result(), "dup_keys": fd.result()}
+    null_keys, dup_keys = overlap(_nulls, _dups)
+    return {"null_keys": null_keys, "dup_keys": dup_keys}

@@ -10,7 +10,8 @@ data moves.
 This module restores that property without Iceberg: the mirror is laid
 out as a parquet table partitioned by a key-hash bucket column, and a
 change batch rewrites ONLY the bucket partitions its keys land in,
-via Spark's dynamic partition overwrite. Cost per batch becomes
+via a staged write swapped in one partition directory at a time.
+Cost per batch becomes
 O(touched buckets × bucket size), not O(|mirror|):
 
 - 100 TB mirror, 4096 buckets → ~25 GB/bucket; a batch touching
@@ -20,9 +21,8 @@ O(touched buckets × bucket size), not O(|mirror|):
   change rows co-locate with the mirror rows they replace, and the
   per-bucket merge join never sees foreign keys.
 - Buckets whose merged result is empty (every row deleted) are
-  cleared explicitly — dynamic partition overwrite only replaces
-  partitions present in the written data, which would otherwise
-  resurrect deleted rows.
+  cleared explicitly — the swap only replaces partitions present in
+  the staged data, which would otherwise resurrect deleted rows.
 
 At even larger scale the same layout extends to date × bucket
 (``TwoLevelMirror``): the outer date level gives retention drops,
@@ -39,11 +39,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .apply import compact_latest, upsert_compacted
+from .apply import PreparedBatch, upsert_compacted
 
 BUCKET_COL = "__bucket"
 
@@ -58,9 +59,20 @@ class BucketedMirror:
     partition-scoped CDC apply.
 
     ``init(snapshot)`` lays the table out; ``apply(changes)`` merges a
-    change batch rewriting only touched bucket partitions;
+    change batch rewriting only touched leaf partitions;
     ``read()`` returns the logical table (bucket column dropped).
+    Subclasses change the layout only through ``_part_cols`` (the
+    partition columns, outermost first) and ``_clustered_stage``.
     """
+
+    # Staged-write shape. False: survivors never shuffle — the
+    # anti-join's batch side broadcasts, each survivor row is written
+    # from the scan task that read it, and only the batch leg is routed
+    # by partition (a batch-sized exchange), so a bucket is written by
+    # scan-sized tasks instead of funnelling through one writer.
+    # True: the merged relation is clustered by partition before the
+    # write.
+    _clustered_stage = False
 
     def __init__(self, spark: SparkSession, path: str, keys: list[str],
                  n_buckets: int = 16,
@@ -70,9 +82,15 @@ class BucketedMirror:
         self.keys = list(keys)
         self.n_buckets = n_buckets
         self.order_cols = list(order_cols)
+        self._part_cols = [BUCKET_COL]
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(BUCKET_COL, bucket_expr(self.keys, self.n_buckets))
+
+    def _part_exprs(self) -> list:
+        """The partition columns as expressions over a change batch."""
+        return [bucket_expr(self.keys, self.n_buckets).alias(c)
+                if c == BUCKET_COL else F.col(c) for c in self._part_cols]
 
     def _schema_path(self) -> str:
         return os.path.join(self.path, "_schema.json")
@@ -84,34 +102,28 @@ class BucketedMirror:
             schema = T.StructType.fromJson(json.load(f))
         return self.spark.createDataFrame([], schema)
 
-    def _has_buckets(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            n.startswith(f"{BUCKET_COL}=") for n in os.listdir(self.path))
-
     def init(self, snapshot: DataFrame, writers: int | None = None) -> None:
         """Lay the table out. ``writers=None`` (default) shuffles by the
-        bucket column first — one writer set per partition dir, one file
-        per bucket. ``writers=N`` skips that clustering shuffle and
-        writes with N tasks each holding rows of many buckets — the
+        partition columns first — one writer set per leaf dir, one file
+        per leaf. ``writers=N`` skips that clustering shuffle and
+        writes with N tasks each holding rows of many leaves — the
         cheap-ingest layout a large snapshot load actually produces
-        (hundreds of upstream tasks, ~N files PER bucket dir), the
+        (hundreds of upstream tasks, ~N files PER leaf dir), the
         fragmentation that ``compact()`` exists to repair.
 
-        r21 (guide §2.5): the writer split hashes a DETERMINISTIC key
-        expression instead of round-robin ``repartition(N)`` — the
-        keyless form pays a local sort of the whole input
-        (sortBeforeRepartition, needed so retried map tasks reproduce
-        their row→partition assignment), while xxhash64 of the merge
-        keys is retry-stable for free. Same file counts (each writer
-        holds rows of many buckets), same content; measured 1.2-1.4 s
-        → 0.8-0.9 s on the sf0.1 ingest write."""
+        The writer split hashes the merge keys (``xxhash64``), which is
+        retry-stable without the local sort a round-robin
+        ``repartition(N)`` pays. It ASSUMES high-cardinality keys: with
+        only a few distinct key tuples, rows pile onto a few writers
+        and the others write nothing."""
         if writers is not None and writers < 1:
             raise ValueError(f"writers must be >= 1, got {writers!r}")
         part = (self._with_bucket(snapshot).repartition(
                     writers, F.xxhash64(*[F.col(k) for k in self.keys]))
                 if writers is not None else
-                self._with_bucket(snapshot).repartition(BUCKET_COL))
-        (part.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(self.path))
+                self._with_bucket(snapshot).repartition(*self._part_cols))
+        (part.write.mode("overwrite").partitionBy(*self._part_cols)
+         .parquet(self.path))
         # Schema sidecar: a zero-row partitioned write leaves no data
         # files to infer from, so an empty (or fully-deleted) mirror
         # must still know its row shape. (An Iceberg/catalog table
@@ -120,153 +132,108 @@ class BucketedMirror:
             f.write(snapshot.schema.json())
 
     def read(self) -> DataFrame:
-        if self._has_buckets():
+        if self._leaf_partitions():
             return self.spark.read.parquet(self.path).drop(BUCKET_COL)
         return self._empty()
 
-    def touched_buckets(self, changes: DataFrame) -> list[int]:
-        """Distinct buckets of the batch keys — ≤ n_buckets ints, a
-        driver-safe collect regardless of batch size."""
-        rows = (changes.select(bucket_expr(self.keys, self.n_buckets)
-                               .alias(BUCKET_COL))
-                .distinct().collect())
-        return sorted(r[0] for r in rows)
-
-    def prepare(self, changes: DataFrame) -> DataFrame:
-        """Materialize a batch's compacted latest-wins form AHEAD of
-        ``apply`` (r21, guide §2.6): the compaction reads only
-        ``changes``, never the mirror, so callers can overlap it with
+    def prepare(self, changes: DataFrame) -> PreparedBatch:
+        """Materialize a batch's compacted latest-wins form and its
+        touched-partition set AHEAD of ``apply``: both read only
+        ``changes``, never the mirror, so callers can overlap this with
         the init write (or any independent job) and pass the handle to
-        ``apply(prepared=...)``. Single-use; apply unpersists it. A
-        handle never passed to apply must be ``unpersist()``-ed by the
-        caller. The count() is the materializing action — persist
-        alone is lazy, and an un-materialized handle would defeat the
-        overlap."""
-        latest = compact_latest(changes, self.keys, self.order_cols).persist()
-        latest.count()
-        return latest
+        ``apply(prepared=...)``, which consumes it. A handle that never
+        reaches ``apply`` is released by a ``with`` block or
+        ``release()``."""
+        return PreparedBatch(changes, self.keys, self.order_cols).materialize(
+            *self._part_exprs())
 
     def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              tag: str = "batch", prepared: DataFrame | None = None
-              ) -> list[int]:
-        """Merge a change batch, rewriting only touched bucket
-        partitions. Returns the list of buckets rewritten.
+              tag: str = "batch", prepared: PreparedBatch | None = None
+              ) -> list:
+        """Merge a change batch, rewriting only touched leaf partitions.
+        Returns the sorted touched partitions: bucket ints, or tuples
+        of partition values for a multi-level layout.
 
-        Plan shape: compact (1 shuffle on keys) → partition-pruned scan
-        of touched buckets only (filter on the partition column — no
-        data files outside them are read) → anti-join + union →
-        dynamic partition overwrite of those buckets.
+        Plan shape: partition-pruned scan of the touched partitions
+        only (a filter on each partition column) → broadcast anti-join
+        + union with the compacted batch → staged write → publish.
 
-        ``prepared``: a handle from ``prepare`` whose compaction job
-        already ran (r21, guide §2.6); ``changes`` is then ignored.
-        """
-        # Computed ONCE and persisted (r20, guide §5): the compaction
-        # window/shuffle used to run twice — once under the
-        # touched-bucket collect, once inside apply_changes' plan.
-        if prepared is None:
-            if changes is None:
-                raise ValueError("apply needs changes or prepared")
-            prepared = compact_latest(
-                changes, self.keys, self.order_cols).persist()
-        latest = prepared
-        try:
-            touched = self.touched_buckets(latest)
+        ``prepared``: a handle from ``prepare``; ``changes`` is then
+        ignored. The handle is consumed: released whether the commit
+        lands or raises."""
+        cols = self._part_cols
+        with PreparedBatch.of(changes, prepared, self.keys,
+                              self.order_cols) as batch:
+            touched = batch.touched(*self._part_exprs())
             if not touched:
                 return []
-            if self._has_buckets():
-                mirror = self.spark.read.parquet(self.path)
-                # BUCKET_COL kept: the scan's rows are already
-                # bucket-aligned (partition dirs), so the staged write
-                # below needs no full-table re-clustering.
-                subset = mirror.filter(F.col(BUCKET_COL).isin(touched))
+            rows = touched if len(cols) > 1 else {(t,) for t in touched}
+            if self._leaf_partitions():
+                # The partition columns stay on the scan: its rows are
+                # already partition-aligned, so the staged write needs
+                # no full-table re-clustering.
+                subset = self.spark.read.parquet(self.path).filter(reduce(
+                    lambda a, b: a & b,
+                    [F.col(c).isin(sorted({r[i] for r in rows}))
+                     for i, c in enumerate(cols)]))
             else:
                 subset = self._with_bucket(self._empty())
-            # r20 (guide §2.4/§8): survivors never shuffle — the
-            # anti-join's batch side broadcasts, and each survivor row
-            # is written from the scan task that read it. Only the
-            # BATCH leg is routed by bucket (a batch-sized exchange).
-            # The old shape re-shuffled the ENTIRE merged relation by
-            # the 16-value bucket column — at 100 TB that moves every
-            # surviving byte once more and funnels each ~25 GB bucket
-            # through a single writer task; skipping it leaves
-            # scan-sized (~128 MB) files per bucket instead. The batch
-            # also arrives already compacted, so the second compaction
-            # window apply_changes used to re-plan is gone
-            # (upsert_compacted).
-            routed = self._with_bucket(latest).repartition(BUCKET_COL)
-            merged = upsert_compacted(subset, self._with_bucket(latest),
-                                      self.keys, op_col=op_col,
-                                      routed=routed)
-            # Stage before overwriting partitions we are also reading
-            # from — the parquet-table analogue of Iceberg's snapshot
-            # commit.
+            latest = self._with_bucket(batch.df)
+            merged = upsert_compacted(
+                subset, latest, self.keys, op_col=op_col,
+                routed=(None if self._clustered_stage
+                        else latest.repartition(*cols)))
+            if self._clustered_stage:
+                merged = merged.repartition(*cols)
             staged = f"{self.path}_{tag}_staged"
-            (merged.write.mode("overwrite")
-             .partitionBy(BUCKET_COL).parquet(staged))
-        finally:
-            latest.unpersist()
-        # Publish = per-partition directory swap of the staged commit
-        # (r20, guide §1.2/§6): the old path re-READ the staged table,
-        # re-SHUFFLED it by bucket, and re-WROTE every staged byte
-        # through dynamic partition overwrite — a full second write job
-        # whose only effect a directory rename already has.
-        # FILESYSTEM ASSUMPTION (r21, VERDICT item 8): os.rename is an
-        # atomic, O(1) metadata move on the POSIX filesystems this
-        # local lake emulates. On an object store (the 100 TB
-        # deployment surface) directory "rename" is copy+delete and
-        # NON-atomic — a production port must publish through the
-        # catalog's pointer swap (Iceberg metadata commit) or an
-        # atomic-rename-capable layer (HDFS, Azure ADLS Gen2),
-        # exactly like the manifest swap in cdc/versioned.py.
-        # This is the
-        # same swap discipline Iceberg's commit applies at the metadata
-        # pointer; content is byte-identical (the staged files ARE the
-        # files). The out-bucket set comes from the staged dir listing,
-        # not a collect job.
-        out_buckets = {
-            int(n.split("=", 1)[1]) for n in os.listdir(staged)
-            if n.startswith(f"{BUCKET_COL}=")
-        }
-        for b in out_buckets:
-            self._drop_partition(b)
-            os.rename(os.path.join(staged, f"{BUCKET_COL}={b}"),
-                      os.path.join(self.path, f"{BUCKET_COL}={b}"))
-        # A bucket whose rows were all deleted writes nothing to the
-        # staged dir and must be cleared explicitly or its old files
-        # survive.
-        for b in set(touched) - out_buckets:
-            self._drop_partition(b)
+            merged.write.mode("overwrite").partitionBy(*cols).parquet(staged)
+        # Publish = per-leaf directory swap of the staged commit; the
+        # staged files ARE the new files. FILESYSTEM ASSUMPTION:
+        # os.rename is an atomic O(1) metadata move on the POSIX
+        # filesystems this local lake emulates. On an object store
+        # directory "rename" is copy+delete and NOT atomic — a
+        # production port must publish through a catalog pointer swap
+        # (Iceberg metadata commit, like the manifest swap in
+        # cdc/versioned.py) or an atomic-rename layer (HDFS, ADLS Gen2).
+        written = set(self._leaf_partitions(staged))
+        for rel in written:
+            target = os.path.join(self.path, rel)
+            shutil.rmtree(target, ignore_errors=True)
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.rename(os.path.join(staged, rel), target)
+        # A touched leaf whose rows were all deleted writes nothing to
+        # the staged dir and must be cleared explicitly or its old
+        # files survive. Staged dir names are the values' string forms.
+        for r in rows:
+            rel = os.path.join(*[f"{c}={v}" for c, v in zip(cols, r)])
+            if rel not in written:
+                shutil.rmtree(os.path.join(self.path, rel),
+                              ignore_errors=True)
         shutil.rmtree(staged, ignore_errors=True)
-        return touched
+        return sorted(touched)
 
-    def _drop_partition(self, bucket: int) -> None:
-        part_dir = os.path.join(self.path, f"{BUCKET_COL}={bucket}")
-        # Local-fs mirror in tests; on HDFS/S3A this is one
-        # FileSystem.delete of the partition dir.
-        shutil.rmtree(part_dir, ignore_errors=True)
-
-    def partition_files(self) -> dict[int, set[str]]:
-        """Parquet file names per bucket dir — test/observability hook
-        for asserting which partitions a batch physically rewrote."""
-        out: dict[int, set[str]] = {}
-        if not os.path.isdir(self.path):
-            return out
-        for name in os.listdir(self.path):
-            if not name.startswith(f"{BUCKET_COL}="):
-                continue
-            b = int(name.split("=", 1)[1])
-            full = os.path.join(self.path, name)
-            out[b] = {f for f in os.listdir(full) if f.endswith(".parquet")}
+    def partition_files(self) -> dict:
+        """Parquet file names per leaf partition — test/observability
+        hook for asserting which partitions a batch physically
+        rewrote. Keys are bucket ints, or (value, ..., bucket) tuples
+        for a multi-level layout (non-bucket values as dir strings)."""
+        out: dict = {}
+        for rel, files in self._leaf_partitions().items():
+            vals = tuple(int(v) if c == BUCKET_COL else v for c, v in
+                         (p.split("=", 1) for p in rel.split(os.sep)))
+            out[vals if len(vals) > 1 else vals[0]] = files
         return out
 
-    def _leaf_partitions(self) -> dict[str, set[str]]:
+    def _leaf_partitions(self, root: str | None = None) -> dict[str, set[str]]:
         """Relative leaf partition dir -> parquet file names, for any
-        partition depth (bucket, or date/bucket)."""
+        partition depth (bucket, or date/bucket), under ``root``
+        (default: the mirror)."""
+        root = self.path if root is None else root
         out: dict[str, set[str]] = {}
-        for root, _dirs, files in os.walk(self.path):
+        for d, _dirs, files in os.walk(root):
             pq = {f for f in files if f.endswith(".parquet")}
-            if pq and "=" in os.path.basename(root):
-                out[os.path.relpath(root, self.path)] = pq
+            if pq and "=" in os.path.basename(d):
+                out[os.path.relpath(d, root)] = pq
         return out
 
     def compact(self, max_files: int = 1) -> dict[str, tuple[int, int]]:
@@ -288,10 +255,8 @@ class BucketedMirror:
         if not frag:
             return {}
         if max_files == 1:
-            # r20 (guide §2.6/§1.2): ONE Spark job over every
-            # fragmented leaf instead of a read→coalesce→write job PER
-            # leaf (the per-job fixed cost dominated — 16 sequential
-            # jobs for a freshly-ingested 16-bucket mirror). basePath
+            # ONE Spark job over every fragmented leaf, not one per
+            # leaf (per-job fixed cost dominates small leaves). basePath
             # keeps the partition columns; repartitioning by them gives
             # exactly one file per leaf dir, which then swaps in by
             # rename. Content is untouched either way (read() identical
@@ -356,125 +321,10 @@ class TwoLevelMirror(BucketedMirror):
                  order_cols: list[str] = ("ts_ms", "off")):
         super().__init__(spark, path, keys, n_buckets, order_cols)
         self.date_col = date_col
+        self._part_cols = [date_col, BUCKET_COL]
 
-    def _has_buckets(self) -> bool:
-        if not os.path.isdir(self.path):
-            return False
-        for name in os.listdir(self.path):
-            if name.startswith(f"{self.date_col}="):
-                full = os.path.join(self.path, name)
-                if any(n.startswith(f"{BUCKET_COL}=") for n in os.listdir(full)):
-                    return True
-        return False
-
-    def init(self, snapshot: DataFrame, writers: int | None = None) -> None:
-        """Two-level layout; ``writers`` has the same cheap-ingest
-        fragmentation semantics as BucketedMirror.init (LSP — review
-        finding: the override must accept the base signature; r21:
-        same deterministic hash split instead of round-robin — see
-        the base docstring)."""
-        if writers is not None and writers < 1:
-            raise ValueError(f"writers must be >= 1, got {writers!r}")
-        part = (self._with_bucket(snapshot).repartition(
-                    writers, F.xxhash64(*[F.col(k) for k in self.keys]))
-                if writers is not None else
-                self._with_bucket(snapshot)
-                .repartition(self.date_col, BUCKET_COL))
-        (part.write.mode("overwrite")
-         .partitionBy(self.date_col, BUCKET_COL).parquet(self.path))
-        with open(self._schema_path(), "w") as f:
-            f.write(snapshot.schema.json())
-
-    def touched_partitions(self, changes: DataFrame) -> list[tuple]:
-        """Distinct (date, bucket) pairs of the batch — bounded by
-        |batch dates| × n_buckets, a driver-safe collect."""
-        rows = (changes.select(
-            F.col(self.date_col),
-            bucket_expr(self.keys, self.n_buckets).alias(BUCKET_COL))
-            .distinct().collect())
-        return sorted((r[0], r[1]) for r in rows)
-
-    def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              tag: str = "batch", prepared: DataFrame | None = None
-              ) -> list[tuple]:
-        """Two-level partition-scoped merge: compact → scan only the
-        (batch dates) × (touched buckets) partitions → anti-join +
-        union → dynamic overwrite of exactly those partitions, with
-        explicit clearing of emptied ones. Returns the touched pairs.
-        ``prepared`` as in BucketedMirror.apply (r21, guide §2.6)."""
-        # Same r20 shape as BucketedMirror.apply: compaction persisted
-        # (one execution instead of two) and the staged commit
-        # published by per-partition directory swap instead of a
-        # second read+shuffle+write job.
-        if prepared is None:
-            if changes is None:
-                raise ValueError("apply needs changes or prepared")
-            prepared = compact_latest(
-                changes, self.keys, self.order_cols).persist()
-        latest = prepared
-        try:
-            touched = self.touched_partitions(latest)
-            if not touched:
-                return []
-            dates = sorted({d for d, _ in touched})
-            buckets = sorted({b for _, b in touched})
-            if self._has_buckets():
-                mirror = self.spark.read.parquet(self.path)
-                subset = (mirror.filter(F.col(self.date_col).isin(dates)
-                                        & F.col(BUCKET_COL).isin(buckets))
-                          .drop(BUCKET_COL))
-            else:
-                subset = self._empty()
-            # upsert_compacted (not apply_changes): the batch arrives
-            # compacted+persisted, so the merge plans ONE batch window
-            # (r20 wave 7). The staged write KEEPS the clustering
-            # exchange here, unlike BucketedMirror — measured (r20,
-            # interleaved A/B at sf0.1): the survivors-never-shuffle
-            # shape on the date x bucket GRID writes through ~3x more
-            # tasks with a per-task dynamic-partition sort and 2x the
-            # files, landing ~2x SLOWER warm (6.8-8.6 s vs 3.1-4.9 s);
-            # the 112-leaf grid gives the clustered write plenty of
-            # writer parallelism, so the single-writer-per-leaf concern
-            # that motivated the flat mirrors' shape does not bite.
-            merged = upsert_compacted(subset, latest, self.keys,
-                                      op_col=op_col)
-            staged = f"{self.path}_{tag}_staged"
-            (self._with_bucket(merged)
-             .repartition(self.date_col, BUCKET_COL)
-             .write.mode("overwrite")
-             .partitionBy(self.date_col, BUCKET_COL).parquet(staged))
-        finally:
-            latest.unpersist()
-        out_parts = set()
-        for dname in os.listdir(staged):
-            if not dname.startswith(f"{self.date_col}="):
-                continue
-            d = dname.split("=", 1)[1]
-            for bname in os.listdir(os.path.join(staged, dname)):
-                if not bname.startswith(f"{BUCKET_COL}="):
-                    continue
-                out_parts.add((d, int(bname.split("=", 1)[1])))
-                target = os.path.join(self.path, dname, bname)
-                shutil.rmtree(target, ignore_errors=True)
-                os.makedirs(os.path.join(self.path, dname), exist_ok=True)
-                os.rename(os.path.join(staged, dname, bname), target)
-        # touched_partitions() yields the date values as read back from
-        # parquet (native types); the staged dir names are their string
-        # forms — compare stringified.
-        touched_str = {(str(d), b) for d, b in touched}
-        for d, b in touched_str - {(str(d), b) for d, b in out_parts}:
-            shutil.rmtree(
-                os.path.join(self.path, f"{self.date_col}={d}",
-                             f"{BUCKET_COL}={b}"),
-                ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
-        return touched
-
-    def partition_files(self) -> dict[tuple, set[str]]:  # type: ignore[override]
-        """(date, bucket) -> parquet file names."""
-        out: dict[tuple, set[str]] = {}
-        for rel, files in self._leaf_partitions().items():
-            date_part, bucket_part = rel.split(os.sep)
-            out[(date_part.split("=", 1)[1],
-                 int(bucket_part.split("=", 1)[1]))] = files
-        return out
+    # On the date × bucket grid the survivors-never-shuffle shape
+    # writes through ~3x more tasks, each with a dynamic-partition
+    # sort, and 2x the files: measured ~2x slower at sf0.1. The grid's
+    # many leaves give a clustered write plenty of writer parallelism.
+    _clustered_stage = True

@@ -1,4 +1,4 @@
-"""Partition-spec evolution over the snapshot ledger (r16, library-only).
+"""Partition-spec evolution over the snapshot ledger.
 
 Iceberg's flagship v2 metadata feature: a table's partition spec can
 CHANGE mid-life — ``ALTER TABLE ... REPLACE PARTITION FIELD
@@ -41,20 +41,14 @@ scan does not need key co-location; a general re-spec here is
 Laws in tests/test_r16_ops.py: content-invisibility across an evolve
 (oracle = the same latest-wins relation a plain mirror produces),
 mid-migration reads, lazy-drain + file-reuse on the manifest, and the
-multiple-only refusal. Staged for a later registered rung
-(q_cdc_evolve_spec) once a driver window has slots — the oracle is
-the existing sequential-apply relation (WAP_RACE_MIRROR_SQL shape).
+multiple-only refusal. Registered as q_cdc_evolve_spec, whose oracle
+is the sequential-apply relation (WAP_RACE_MIRROR_SQL).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-from .apply import upsert_compacted
-from .bucketed import BUCKET_COL, bucket_expr
-from .versioned import CommitConflictError, SnapshotMirror
-
-from pyspark.sql import functions as F
+from .bucketed import BUCKET_COL
+from .versioned import SnapshotMirror
 
 
 def _parse_label(label: str) -> tuple[int, int]:
@@ -64,46 +58,59 @@ def _parse_label(label: str) -> tuple[int, int]:
 
 
 class SpecEvolvingMirror(SnapshotMirror):
-    """SnapshotMirror whose bucket layout can evolve mid-table."""
+    """SnapshotMirror whose bucket layout can evolve mid-table. It
+    supplies only its entry layout to the base merge/commit loop:
+    spec-qualified labels, the modular affected-entry rule, and the
+    CURRENT spec as a top-level manifest rider (so every bucket value
+    stays a plain data path for expire's referenced-dir walk)."""
 
-    def init(self, snapshot: DataFrame) -> int:
-        buckets = {
-            f"{self.n_buckets}:{b}": d
-            for b, d in self._write_commit_data(snapshot, 0).items()
-        }
-        return self._commit_spec(buckets, snapshot.schema.json(),
-                                 spec=self.n_buckets, parent=-1)
+    def _spec(self, manifest: dict) -> int:
+        return int(manifest.get("spec", self.n_buckets))
 
-    # --- spec-aware manifest plumbing ---
+    def _rider(self, spec: int) -> dict:
+        return {"extra": {"spec": spec}}
 
-    def _commit_spec(self, buckets: dict[str, str], schema_json: str,
-                     spec: int, parent: int, linear: bool = True) -> int:
-        """_commit, carrying the CURRENT spec as a TOP-LEVEL manifest
-        field (``manifest["spec"]`` — r16 advice: the first cut smuggled
-        it as a reserved "__spec__" entry inside the buckets map, a
-        non-path value every base consumer that walks bucket values
-        (expire's referenced-dir scan, the orphan vacuum) would have to
-        know to skip). Reuses the base commit protocol verbatim:
-        exclusive-create publish, stale-base CommitConflictError when
-        ``linear``, free-version allocation when not (pinned branch
-        commits — the base-class contract)."""
-        return self._commit(buckets, schema_json, parent=parent,
-                            linear=linear, extra={"spec": spec})
+    def _affected(self, entries: dict[str, str],
+                  touched: set[int]) -> dict[str, str]:
+        """Entry ``"{n_e}:{b_e}"`` is affected iff ``b_e`` is in
+        ``{t % n_e}`` over the touched current-spec buckets ``t``
+        (module docstring: one candidate entry per touched bucket and
+        live spec). The modulo set is computed once per distinct
+        ``n_e``, not per entry."""
+        mods: dict[int, set[int]] = {}
+        out = {}
+        for label, d in entries.items():
+            n_e, b_e = _parse_label(label)
+            if n_e not in mods:
+                mods[n_e] = {t % n_e for t in touched}
+            if b_e in mods[n_e]:
+                out[label] = d
+        return out
+
+    def _adopt(self, kept: dict[str, str], written: dict[str, str],
+               spec: int) -> dict[str, str]:
+        """Label rewritten buckets under ``spec``. Children-partition
+        invariant: a rewritten row can only land in a bucket whose
+        finer entry does not already live (its coarse ancestor died the
+        first time that bucket was touched). A collision means the
+        invariant broke — refuse loudly rather than shadow live data."""
+        out = dict(kept)
+        for b, d in written.items():
+            label = f"{spec}:{b}"
+            if label in out:
+                raise RuntimeError(
+                    f"spec-migration invariant violated: rewrite "
+                    f"produced {label} but a live entry exists")
+            out[label] = d
+        return out
 
     def _entries(self, manifest: dict) -> dict[str, str]:
         """The spec-qualified data entries ("{n}:{b}" -> dir)."""
         return dict(manifest["buckets"])
 
     def current_spec(self, manifest: dict | None = None) -> int:
-        m = manifest if manifest is not None else self._load_manifest(
-            self.current_version())
-        return int(m.get("spec", self.n_buckets))
-
-    # read() needs no override: bucket values are plain data dirs
-    # (the spec rides top-level), so the base reader's union of all
-    # manifest dirs is already spec-agnostic scan planning.
-
-    # --- the evolved operations ---
+        return self._spec(manifest if manifest is not None else
+                          self._load_manifest(self.current_version()))
 
     def evolve_spec(self, new_n: int) -> int:
         """Metadata-only spec change: same data entries, new CURRENT
@@ -117,131 +124,8 @@ class SpecEvolvingMirror(SnapshotMirror):
             raise ValueError(
                 f"spec can only grow by an integer multiple: current "
                 f"{cur}, requested {new_n}")
-        return self._commit_spec(self._entries(m), m["schema"],
-                                 spec=new_n, parent=base)
-
-    def prepare(self, changes: DataFrame) -> DataFrame:
-        """Spec-independent batch materialization ahead of ``apply``
-        (r21, guide §2.6 — overlappable with init; overrides the base
-        prepare because this class's apply derives touched sets PER
-        SPEC inside the merge loop, so the handle is just the
-        persisted compacted batch). count() materializes it."""
-        from .apply import compact_latest
-
-        latest = compact_latest(changes, self.keys, self.order_cols).persist()
-        latest.count()
-        return latest
-
-    def apply(self, changes: DataFrame | None = None, op_col: str = "op",
-              base_version: int | None = None, max_retries: int = 5,
-              prepared: DataFrame | None = None) -> int:
-        """Touched-only COW merge under the manifest's CURRENT spec,
-        across however many specs the live entries span. Affected
-        entries rewrite UNDER THE CURRENT SPEC (lazy migration);
-        unaffected entries carry verbatim. ``prepared`` as in
-        BucketedMirror.apply (r21, guide §2.6)."""
-        if max_retries < 1:
-            raise ValueError("max_retries must be >= 1")
-        from .apply import compact_latest
-
-        # Materialized once, like _prepare_batch: the touched-bucket
-        # collect AND every retry's merge read cache blocks instead of
-        # re-running the compaction job; released in the finally (r17
-        # advice — checkpoint blocks leaked until ContextCleaner GC,
-        # a persist the owner unpersists does not).
-        if prepared is None:
-            if changes is None:
-                raise ValueError("apply needs changes or prepared")
-            prepared = compact_latest(
-                changes, self.keys, self.order_cols
-            ).persist()
-        latest = prepared
-        try:
-            return self._apply_cached(latest, op_col=op_col,
-                                      base_version=base_version,
-                                      max_retries=max_retries)
-        finally:
-            latest.unpersist()
-
-    def _apply_cached(self, latest: DataFrame, op_col: str,
-                      base_version: int | None, max_retries: int) -> int:
-        """apply()'s retry loop over the already-cached batch."""
-        # Pinned base => branch-commit shape: version numbers may
-        # interleave with other writers, so the commit allocates the
-        # next free version instead of demanding parent+1 (linear).
-        # This is the base-class contract plumbed through _commit_spec
-        # (r16 advice: always-linear made every pinned non-head base
-        # an instant, unretryable CommitConflictError).
-        linear = base_version is None
-        last_conflict: CommitConflictError | None = None
-        for _ in range(max_retries):
-            base = (self.current_version() if base_version is None
-                    else base_version)
-            m = self._load_manifest(base)
-            spec = self.current_spec(m)
-            touched = {
-                int(r[0]) for r in
-                latest.select(bucket_expr(self.keys, spec)).distinct()
-                .collect()
-            }
-            entries = self._entries(m)
-            # Touched-modulo sets precomputed once per DISTINCT spec
-            # among the live entries (r17 advice: the inline set
-            # comprehension re-derived {t % n for t in touched} for
-            # every entry — O(entries x touched) on a large manifest).
-            touched_mod: dict[int, set[int]] = {}
-            affected = {}
-            for label, d in entries.items():
-                n_e, b_e = _parse_label(label)
-                mods = touched_mod.get(n_e)
-                if mods is None:
-                    mods = touched_mod.setdefault(
-                        n_e, {t % n_e for t in touched})
-                if b_e in mods:
-                    affected[label] = d
-            try:
-                if not touched:
-                    return self._commit_spec(entries, m["schema"],
-                                             spec=spec, parent=base,
-                                             linear=linear)
-                subset = self._read_dirs(
-                    sorted(affected.values()), m["schema"]).drop(BUCKET_COL)
-                # r20 (guide §2.4/§8): survivors rewrite under the
-                # current spec WITHOUT a full-relation shuffle — the
-                # bucket value is a projection of the keys, so
-                # partitionBy routes each scan task's rows directly;
-                # only the batch leg exchanges (batch-sized). The
-                # batch is already compacted (apply() persisted it),
-                # so apply_changes' second compaction window is gone.
-                routed = latest.repartition(bucket_expr(self.keys, spec))
-                merged = upsert_compacted(subset, latest, self.keys,
-                                          op_col=op_col, routed=routed)
-                written = self._write_commit_data(
-                    merged, self.current_version() + 1, n_buckets=spec,
-                    cluster=False)
-                buckets = {label: d for label, d in entries.items()
-                           if label not in affected}
-                for b, d in written.items():
-                    # Children-partition invariant: a rewritten row can
-                    # only land in a bucket whose finer entry does not
-                    # already live (its coarse ancestor died the first
-                    # time that bucket was touched). A collision here
-                    # means the invariant broke — refuse loudly rather
-                    # than shadow live data.
-                    label = f"{spec}:{b}"
-                    if label in buckets:
-                        raise RuntimeError(
-                            f"spec-migration invariant violated: rewrite "
-                            f"produced {label} but a live entry exists")
-                    buckets[label] = d
-                return self._commit_spec(buckets, m["schema"],
-                                         spec=spec, parent=base,
-                                         linear=linear)
-            except CommitConflictError as e:
-                if base_version is not None:
-                    raise
-                last_conflict = e
-        raise last_conflict
+        return self._commit(self._entries(m), m["schema"], parent=base,
+                            linear=True, **self._rider(new_n))
 
     def spec_census(self) -> dict[int, int]:
         """{spec: live entry count} at the head — the lazy-migration
@@ -253,7 +137,6 @@ class SpecEvolvingMirror(SnapshotMirror):
             n, _ = _parse_label(label)
             out[n] = out.get(n, 0) + 1
         return out
-
 
     def migrate(self) -> int:
         """FINISH the lazy migration: rewrite every old-spec entry
@@ -274,13 +157,7 @@ class SpecEvolvingMirror(SnapshotMirror):
                                 m["schema"]).drop(BUCKET_COL)
         written = self._write_commit_data(
             moved, self.current_version() + 1, n_buckets=spec)
-        buckets = {l: d for l, d in entries.items() if l not in old}
-        for b, d in written.items():
-            label = f"{spec}:{b}"
-            if label in buckets:
-                raise RuntimeError(
-                    f"spec-migration invariant violated: migrate "
-                    f"produced {label} but a live entry exists")
-            buckets[label] = d
-        return self._commit_spec(buckets, m["schema"], spec=spec,
-                                 parent=base)
+        kept = {l: d for l, d in entries.items() if l not in old}
+        return self._commit(self._adopt(kept, written, spec), m["schema"],
+                            parent=base, linear=True,
+                            **self._rider(spec))

@@ -33,13 +33,12 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .apply import compact_latest, upsert_compacted
+from .apply import PreparedBatch, upsert_compacted
 from .bucketed import BUCKET_COL, bucket_expr
 from .diff import table_changes
 
-# Strict manifest-file name parse (r16 advice): a stray
-# ``v2.json.bak`` or editor droppings in manifests/ must be IGNORED,
-# not crash every versions() walk with ValueError on int().
+# Strict manifest-file name parse: a stray ``v2.json.bak`` or editor
+# droppings in manifests/ are ignored, not a ValueError on int().
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
 
 
@@ -91,25 +90,20 @@ class SnapshotMirror:
         manifest to a lineage tombstone ({version, base, expired}) —
         its data is reclaimed and it no longer reads, but the parent
         chain stays walkable (fast_forward's ancestry check must not
-        be wedged by routine maintenance — review finding r16).
+        be wedged by routine maintenance).
 
         Tombstoned versions are detected from the sibling ``v{N}.tomb``
-        MARKER files expire() drops, so this stays ONE listdir — the
-        flag-in-manifest check made every versions() call open and
-        JSON-parse all n manifests (O(n²) file opens over the ledger's
-        life, on hot paths like current_version and the apply retry
-        loop — review finding r16). The manifest's ``expired`` flag is
-        still written and still checked by read(), as the belt to this
-        suspender."""
+        MARKER files expire() drops, so this stays ONE listdir instead
+        of opening every manifest (current_version and the apply retry
+        loop call it). The manifest's ``expired`` flag is still written
+        and still checked by read(), as the belt to this suspender."""
         mdir = os.path.join(self.path, "manifests")
         try:
             names = set(os.listdir(mdir))
         except FileNotFoundError:
             # Only a genuinely-uninitialized mirror reads as empty; a
-            # permissions/IO failure must SURFACE, not masquerade as
-            # "mirror has no committed version" from current_version()
-            # (r16 advice: the old blanket OSError swallow hid the
-            # real error behind a misleading ValueError).
+            # permissions/IO failure must surface, not masquerade as
+            # "mirror has no committed version" from current_version().
             return []
         return [
             v for v in sorted(
@@ -150,9 +144,8 @@ class SnapshotMirror:
         the caller merged from what it believes is the LEDGER HEAD, so
         winning any version other than ``parent + 1`` means another
         writer committed first and this bucket map is STALE — raise
-        CommitConflictError instead of publishing a lost update (the
-        old blind ``version += 1`` retry silently dropped the winner's
-        changes from the new head). With ``linear=False`` (branch
+        CommitConflictError instead of publishing a lost update that
+        drops the winner's changes from the new head. With ``linear=False`` (branch
         commits: version numbers legitimately interleave across refs)
         a collision is pure allocation and the next number is retried;
         the lost-update guard for those lives at the ref swap
@@ -165,23 +158,17 @@ class SnapshotMirror:
                     f"head moved past v{parent} (next free version is "
                     f"v{version}): bucket map is stale — re-read and re-merge")
             # ``extra``: subclass metadata riders (cdc/specs.py stores
-            # the table's CURRENT partition spec as a TOP-LEVEL field —
-            # r16 advice: a sentinel entry inside the buckets map would
-            # break any base consumer that treats bucket values as data
-            # paths). Core keys always win over a rider collision.
+            # the CURRENT partition spec top-level, so every bucket
+            # value stays a data path). Core keys always win.
             manifest = {**(extra or {}), "version": version,
                         "schema": schema_json, "buckets": buckets}
             if parent is not None:
                 manifest["base"] = parent
-            # Writer-unique tmp name (r21 fix): a pid-only suffix
-            # COLLIDES for two concurrent branch writers in one driver
-            # process (q_cdc_wap_race / q_cdc_wap_publish commit from
-            # ThreadPoolExecutor threads) — both stage the same
-            # version's tmp file, the winner links-and-unlinks it, and
-            # the loser's os.link dies with FileNotFoundError instead
-            # of the FileExistsError the allocation loop handles. Same
-            # uniquifier discipline as _write_ref's tmp (r16) and the
-            # data-dir names.
+            # Writer-unique tmp name: concurrent branch writers in one
+            # driver process (overlapped WAP legs) would otherwise
+            # stage the same file, and the loser's os.link would die
+            # with FileNotFoundError instead of the FileExistsError the
+            # allocation loop handles.
             import threading
             import uuid as _uuid
 
@@ -212,8 +199,8 @@ class SnapshotMirror:
         version is always > its base), so the walk terminates. The walk
         crosses expired versions safely — expire() leaves a lineage
         TOMBSTONE carrying ``base`` in place of each dead manifest, so
-        routine maintenance never wedges an ancestry proof (review
-        finding r16). Only a MISSING manifest file (pre-tombstone
+        routine maintenance never wedges an ancestry proof. Only a
+        MISSING manifest file (pre-tombstone
         layouts, manual deletion) refuses with ValueError — lineage
         that cannot be proven is refused, not guessed."""
         v = descendant
@@ -241,13 +228,12 @@ class SnapshotMirror:
         under the manifest's CURRENT spec, not the constructor's).
 
         ``cluster=False`` skips the full-relation Exchange before the
-        write (r20, guide §2.4/§8): a COW merge's survivor leg was READ
-        from per-bucket data dirs, so its rows already sit in
-        bucket-aligned scan tasks — re-shuffling the whole merged
-        relation by a 16-value key moved every surviving byte over the
-        network (and, at 100 TB, serialized each 25 GB bucket through
-        ONE writer task) only to recreate the clustering the scan
-        already had. With the shuffle skipped, partitionBy still routes
+        write: a COW merge's survivor leg was READ from per-bucket data
+        dirs, so its rows already sit in bucket-aligned scan tasks —
+        re-shuffling the whole merged relation by a 16-value key would
+        move every surviving byte over the network (and, at 100 TB,
+        serialize each 25 GB bucket through ONE writer task) only to
+        recreate that clustering. With the shuffle skipped, partitionBy still routes
         each row to its bucket dir; a task holding several buckets'
         rows just writes several files (manifests map bucket → dir, not
         bucket → one file). Callers keep the batch leg tidy by routing
@@ -288,9 +274,11 @@ class SnapshotMirror:
         """Commit v0. Refuses (CommitConflictError) if the ledger
         already has snapshots — re-initializing a live mirror is the
         double-CREATE-TABLE race, not an apply."""
-        buckets = self._write_commit_data(snapshot, 0)
+        buckets = self._adopt({}, self._write_commit_data(snapshot, 0),
+                              self.n_buckets)
         return self._commit(buckets, snapshot.schema.json(),
-                            parent=-1, linear=True)
+                            parent=-1, linear=True,
+                            **self._rider(self.n_buckets))
 
     def read(self, version: int | None = None) -> DataFrame:
         """The mirror as of ``version`` (default: latest) — time travel."""
@@ -310,21 +298,20 @@ class SnapshotMirror:
                 f"reclaimed; only its lineage tombstone remains")
         return self._read_dirs(sorted(m["buckets"].values()), m["schema"])
 
-    def prepare(self, changes: DataFrame):
-        """Materialize a batch's merge-ready form AHEAD of ``apply``
-        (r21, guide §2.6): the compaction window + persist + touched-
-        bucket collect read only ``changes``, never the mirror, so a
-        caller can run this concurrently with ``init`` (or any other
-        independent job) and pass the handle to
-        ``apply(prepared=...)``. The handle is OPAQUE and single-use;
-        ``apply`` releases its cache whether the commit lands or
-        raises. A handle that is never passed to ``apply`` must be
-        released by the caller (``handle[0].unpersist()``)."""
-        return self._prepare_batch(changes)
+    def prepare(self, changes: DataFrame) -> PreparedBatch:
+        """Materialize a batch's merge-ready form AHEAD of ``apply``:
+        compaction, persist and the touched-bucket collect read only
+        ``changes``, never the mirror, so a caller can run this
+        concurrently with ``init`` (or any other independent job) and
+        pass the handle to ``apply(prepared=...)``, which consumes it.
+        A handle that never reaches ``apply`` is released by a ``with``
+        block or ``release()``."""
+        return PreparedBatch(changes, self.keys, self.order_cols).materialize(
+            bucket_expr(self.keys, self.n_buckets))
 
     def apply(self, changes: DataFrame | None = None, op_col: str = "op",
               base_version: int | None = None, max_retries: int = 5,
-              prepared=None) -> int:
+              prepared: PreparedBatch | None = None) -> int:
         """Merge a change batch as a new snapshot. Reads ONLY the
         touched buckets of the base version (default: latest), writes
         ONLY their replacements; every other bucket entry is carried
@@ -340,62 +327,42 @@ class SnapshotMirror:
         lineage is still recorded, but conflict detection for branches
         happens at the ref swap, so no retry is attempted here.
 
-        ``prepared``: a handle from ``prepare`` — the batch's
-        compaction job already ran (possibly overlapped with other
-        work); ``changes`` is then ignored and the handle is consumed
-        (r21, guide §2.6)."""
-        if prepared is None:
-            if changes is None:
-                raise ValueError("apply needs changes or prepared")
-            prepared = self._prepare_batch(changes)
-        latest, touched = prepared
-        try:
-            return self._apply_prepared(latest, touched, op_col=op_col,
-                                        base_version=base_version,
-                                        max_retries=max_retries)
-        finally:
-            # Caller owns the batch cache's lifetime (r17 advice): once
-            # the commit lands (or the last retry raises) nothing reads
-            # it again, and a long-lived driver doing many applies must
-            # not accumulate executor storage until ContextCleaner GC.
-            latest.unpersist()
+        ``prepared``: a handle from ``prepare``; ``changes`` is then
+        ignored. The handle is consumed: released whether the commit
+        lands or raises."""
+        with PreparedBatch.of(changes, prepared, self.keys,
+                              self.order_cols) as batch:
+            return self._rewrite(batch, op_col=op_col,
+                                 base_version=base_version,
+                                 max_retries=max_retries)
 
-    def _prepare_batch(self, changes: DataFrame):
-        """The batch's compacted latest-wins form and its touched-bucket
-        set — pure functions of ``changes``, computed ONCE and reused
-        across every conflict retry (this ledger's retry loop AND the
-        ref-CAS loop one level up in branches.py, which used to re-run
-        the compaction job per retry — review finding r16).
+    # --- entry layout: SpecEvolvingMirror overrides these four ---
 
-        ``latest`` is MATERIALIZED (persist + the touched-bucket
-        collect below as the materializing action), not just hoisted:
-        a lazy plan would re-execute the compaction job inside every
-        retry's ``apply_changes`` — and even the no-retry path would
-        pay it twice (once for the touched-bucket collect, once in the
-        merge). Cached, the window/shuffle runs exactly once and
-        retries re-read batch-sized cache blocks (r16 advice: the
-        hoist alone only saved the collect). persist, NOT
-        localCheckpoint (r17 advice): checkpoint blocks are freeable
-        only by ContextCleaner GC, while the caller can (and must)
-        ``unpersist()`` this relation the moment its commit lands —
-        and persist keeps lineage, so an evicted block recomputes
-        instead of failing."""
-        latest = compact_latest(
-            changes, self.keys, self.order_cols
-        ).persist()
-        touched = {
-            str(r[0]) for r in
-            latest.select(bucket_expr(self.keys, self.n_buckets)).distinct()
-            .collect()
-        }
-        return latest, touched
+    def _spec(self, manifest: dict) -> int:
+        """Bucket count the next write routes by."""
+        return self.n_buckets
 
-    def _apply_prepared(self, latest: DataFrame, touched: set[str],
-                        op_col: str = "op",
-                        base_version: int | None = None,
-                        max_retries: int = 5) -> int:
-        """apply()'s merge-and-commit loop over an already-prepared
-        batch (see _prepare_batch)."""
+    def _rider(self, spec: int) -> dict:
+        """``_commit`` keyword arguments that record the spec a commit
+        routed by; none for a fixed layout."""
+        return {}
+
+    def _affected(self, entries: dict[str, str],
+                  touched: set[int]) -> dict[str, str]:
+        """The manifest entries that can hold a touched bucket's keys."""
+        return {b: d for b, d in entries.items() if int(b) in touched}
+
+    def _adopt(self, kept: dict[str, str], written: dict[str, str],
+               spec: int) -> dict[str, str]:
+        """Carried-over entries plus a commit's freshly written bucket
+        dirs (bucket -> dir, as ``_write_commit_data`` returns them)."""
+        return {**kept, **written}
+
+    def _rewrite(self, batch: PreparedBatch, op_col: str = "op",
+                 base_version: int | None = None,
+                 max_retries: int = 5) -> int:
+        """The touched-only merge, commit and retry loop over a prepared
+        batch; the caller owns ``batch``."""
         if max_retries < 1:
             raise ValueError("max_retries must be >= 1")
         pinned = base_version is not None
@@ -403,31 +370,30 @@ class SnapshotMirror:
         for _ in range(max_retries):
             base = base_version if pinned else self.current_version()
             m = self._load_manifest(base)
+            spec = self._spec(m)
+            touched = batch.touched(bucket_expr(self.keys, spec))
+            affected = self._affected(m["buckets"], touched)
+            kept = {b: d for b, d in m["buckets"].items()
+                    if b not in affected}
             try:
-                if not touched:
-                    return self._commit(dict(m["buckets"]), m["schema"],
-                                        parent=base, linear=not pinned)
-                subset_dirs = [d for b, d in m["buckets"].items() if b in touched]
-                subset = self._read_dirs(subset_dirs, m["schema"]).drop(BUCKET_COL)
-                # r20 (guide §2.4/§8): survivors stay in their scan
-                # tasks (broadcast anti-join is narrow); only the
-                # BATCH leg is routed by bucket — a batch-sized
-                # exchange — so the staged write needs no full-table
-                # shuffle (cluster=False). The batch arrives already
-                # compacted and persisted (_prepare_batch), so the old
-                # second compaction window inside apply_changes is
-                # gone too (upsert_compacted).
-                routed = latest.repartition(
-                    bucket_expr(self.keys, self.n_buckets))
-                merged = upsert_compacted(subset, latest, self.keys,
-                                          op_col=op_col, routed=routed)
-                written = self._write_commit_data(
-                    merged, self.current_version() + 1, cluster=False)
-                buckets = {b: d for b, d in m["buckets"].items()
-                           if b not in touched}
-                buckets.update(written)  # touched-but-now-empty buckets drop
-                return self._commit(buckets, m["schema"],
-                                    parent=base, linear=not pinned)
+                if touched:
+                    subset = self._read_dirs(
+                        sorted(affected.values()), m["schema"]
+                    ).drop(BUCKET_COL)
+                    # Survivors stay in their scan tasks (broadcast
+                    # anti-join is narrow); only the batch leg is
+                    # routed by bucket, so the staged write needs no
+                    # full-table shuffle (cluster=False).
+                    routed = batch.df.repartition(bucket_expr(self.keys, spec))
+                    merged = upsert_compacted(subset, batch.df, self.keys,
+                                              op_col=op_col, routed=routed)
+                    written = self._write_commit_data(
+                        merged, self.current_version() + 1, n_buckets=spec,
+                        cluster=False)
+                    # touched-but-now-empty buckets drop out
+                    kept = self._adopt(kept, written, spec)
+                return self._commit(kept, m["schema"], parent=base,
+                                    linear=not pinned, **self._rider(spec))
             except CommitConflictError as e:
                 if pinned:
                     raise  # branch caller owns the retry (ref CAS)
@@ -469,7 +435,7 @@ class SnapshotMirror:
         actual storage — while the parent chain stays walkable, so
         fast_forward's ancestry check still works across expired
         history and a routine vacuum can never wedge a legitimate
-        publish (review finding r16). Tombstones also hold their
+        publish. Tombstones also hold their
         version numbers against reallocation (_all_versions)."""
         import shutil
         import time

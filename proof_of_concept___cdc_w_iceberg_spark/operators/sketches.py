@@ -21,8 +21,11 @@ bit positions / cells and results hash-match exactly.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
+from ..obs import overlap
 from ..registry import query
 from ..sources.tables import load
 from ._util import dec_sum
@@ -992,10 +995,7 @@ def _kq_exact_ranks(spark, li, targets, n=None):
         )
         return in_bucket.orderBy("v").limit(offset).agg(F.max("v")).first()[0]
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, len(targets))) as pool:
-        out = dict(zip(targets, pool.map(probe, targets)))
+    out = dict(zip(targets, overlap(*[partial(probe, q) for q in targets])))
     return out, n
 
 
@@ -1245,13 +1245,9 @@ def theta_readout(sk_a, sk_b, a_keys, b_keys):
     materializations are independent jobs and overlap from a small
     thread pool (guide §2.6) so the cut costs ~one job latency, not
     four."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        sk_a, sk_b, a_keys, b_keys = pool.map(
-            lambda df: df.localCheckpoint(eager=True),
-            (sk_a, sk_b, a_keys, b_keys),
-        )
+    sk_a, sk_b, a_keys, b_keys = overlap(
+        *[partial(df.localCheckpoint, eager=True)
+          for df in (sk_a, sk_b, a_keys, b_keys)])
     th_a, th_b = _theta_of(sk_a), _theta_of(sk_b)
     th_u = (
         th_a.crossJoin(th_b.withColumnRenamed("theta", "theta_b"))

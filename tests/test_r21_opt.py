@@ -1,4 +1,5 @@
-"""r21 optimization-round equivalence pins (OPTIMIZATION_r21.md).
+"""Optimization equivalence pins (OPTIMIZATION_r21.md) and the
+prepared-batch ownership laws of the CDC mirrors.
 
 Same contract as tests/test_r20_opt.py: every optimization here
 restructured an operator's internals while the registered results must
@@ -8,6 +9,7 @@ the reference shape it replaced.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from proof_of_concept___cdc_w_iceberg_spark.ext import ann
@@ -87,19 +89,20 @@ def test_substr_state_build_materialize_hook_row_preserving(spark):
 
 
 def test_concurrent_commits_same_process_allocate_distinct_versions(spark, tmp_path):
-    """r21 fix: _commit's staging tmp name was pid-only, so two driver
-    THREADS committing concurrently (the wap_race / overlapped
-    wap_publish shape) staged the same file — the winner's
-    link-and-unlink made the loser's os.link die with
+    """_commit's staging tmp name must be writer-unique: with a pid-only
+    name, two driver THREADS committing concurrently (the wap_race /
+    overlapped wap_publish shape) stage the same file, and the winner's
+    link-and-unlink makes the loser's os.link die with
     FileNotFoundError instead of the FileExistsError the allocation
-    loop retries on. With the writer-unique tmp name, N concurrent
-    commits must serialize to N distinct versions with no error."""
+    loop retries on. N concurrent commits must serialize to N distinct
+    versions with no error."""
     import threading
-    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
 
     from proof_of_concept___cdc_w_iceberg_spark.cdc.versioned import (
         SnapshotMirror,
     )
+    from proof_of_concept___cdc_w_iceberg_spark.obs import overlap
 
     m = SnapshotMirror(spark, str(tmp_path / "mirror"), keys=["k"])
     df = spark.createDataFrame([(1, "a")], "k long, v string")
@@ -111,52 +114,124 @@ def test_concurrent_commits_same_process_allocate_distinct_versions(spark, tmp_p
         barrier.wait()
         return m._commit({}, df.schema.json(), parent=0, linear=False)
 
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        versions = list(pool.map(commit, range(8)))
+    versions = overlap(*[partial(commit, i) for i in range(8)])
     assert sorted(versions) == list(range(1, 9))
 
 
-def test_prepare_then_apply_matches_plain_apply(spark, tmp_path):
-    """r21 prepare/apply(prepared=) split: applying a pre-materialized
-    batch handle must commit exactly what the one-call apply commits,
-    and the branch path must accept handles the same way."""
-    from proof_of_concept___cdc_w_iceberg_spark.cdc.branches import (
-        BranchedMirror,
+def _persistent_ids(spark) -> set[int]:
+    """Ids of the RDDs the context currently holds persisted. Compared
+    as sets, not counts: ContextCleaner may drop an unrelated earlier
+    test's garbage RDD at any moment, which only ever shrinks the set."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+MIRROR_KINDS = ["SnapshotMirror", "BranchedMirror", "SpecEvolvingMirror",
+                "SpecEvolvingMirror-evolved", "BucketedMirror",
+                "TwoLevelMirror"]
+
+
+def _mirror(spark, path, kind):
+    from proof_of_concept___cdc_w_iceberg_spark.cdc import (
+        branches, bucketed, specs, versioned,
     )
 
+    keys = ["k"]
+    if kind == "TwoLevelMirror":
+        return bucketed.TwoLevelMirror(spark, path, keys, date_col="day",
+                                       n_buckets=4)
+    cls = {"SnapshotMirror": versioned.SnapshotMirror,
+           "BranchedMirror": branches.BranchedMirror,
+           "BucketedMirror": bucketed.BucketedMirror,
+           }.get(kind, specs.SpecEvolvingMirror)
+    return cls(spark, path, keys, n_buckets=4)
+
+
+@pytest.mark.parametrize("kind", MIRROR_KINDS)
+def test_prepare_then_apply_matches_plain_apply(spark, tmp_path, kind):
+    """Every mirror family: applying a prepare() handle commits exactly
+    what the one-call apply commits, the handle is released by apply
+    (no persisted RDD outlives the commit), and apply with neither
+    argument refuses. Branches accept handles the same way; the
+    spec-evolving mirror is checked before and after evolve_spec(2n)."""
     base = spark.createDataFrame(
-        [(i, f"n{i}", float(i)) for i in range(30)],
-        "k long, name string, bal double",
+        [(i, f"n{i}", float(i), i % 3) for i in range(30)],
+        "k long, name string, bal double, day int",
     )
     changes = spark.createDataFrame(
-        [(3, "x", 9.9, "u", 100, 1), (200, "new", 1.0, "c", 100, 2),
-         (7, None, None, "d", 100, 3)],
-        "k long, name string, bal double, op string, ts_ms long, off long",
+        [(3, "x", 9.9, 0, "u", 100, 1), (200, "new", 1.0, 2, "c", 100, 2),
+         (7, None, None, 1, "d", 100, 3)],
+        "k long, name string, bal double, day int, op string, ts_ms long, "
+        "off long",
     )
 
-    m1 = BranchedMirror(spark, str(tmp_path / "plain"), keys=["k"])
-    m1.init(base)
+    def build(sub):
+        m = _mirror(spark, str(tmp_path / sub), kind)
+        m.init(base)
+        if kind == "SpecEvolvingMirror-evolved":
+            m.evolve_spec(8)
+        return m
+
+    def rows(df):
+        return sorted(map(tuple, df.select("k", "name", "bal", "day")
+                          .collect()))
+
+    m1 = build("plain")
     m1.apply(changes)
-    plain = sorted(map(tuple, m1.read_ref("main").drop("__bucket").collect()))
+    plain = rows(m1.read())
 
-    m2 = BranchedMirror(spark, str(tmp_path / "prepped"), keys=["k"])
-    m2.init(base)
+    m2 = build("prepped")
+    before = _persistent_ids(spark)
     m2.apply(prepared=m2.prepare(changes))
-    prepped = sorted(
-        map(tuple, m2.read_ref("main").drop("__bucket").collect()))
-    assert plain == prepped
+    assert not (_persistent_ids(spark) - before), "apply leaked the handle"
+    assert rows(m2.read()) == plain
 
-    m3 = BranchedMirror(spark, str(tmp_path / "branch"), keys=["k"])
-    m3.init(base)
-    m3.branch_create("audit")
-    m3.apply_to_branch("audit", prepared=m3.prepare(changes))
-    branched = sorted(
-        map(tuple, m3.read_ref("audit").drop("__bucket").collect()))
-    assert plain == branched
+    if kind == "BranchedMirror":
+        m3 = build("branch")
+        m3.branch_create("audit")
+        m3.apply_to_branch("audit", prepared=m3.prepare(changes))
+        assert not (_persistent_ids(spark) - before)
+        assert rows(m3.read_ref("audit")) == plain
 
-    # apply without either argument must refuse loudly
-    try:
-        m3.apply()
-        raise AssertionError("apply() with no batch must raise")
-    except ValueError:
+    with pytest.raises(ValueError):
+        m2.apply()
+
+
+@pytest.mark.parametrize("query,fail", [
+    ("q_cdc_apply_bucketed", "init"),
+    ("q_cdc_wap_publish", "init"),
+    ("q_cdc_wap_race", "init"),
+    ("q_cdc_wap_publish", "audit"),
+])
+def test_failed_step_releases_prepared_handles(spark, sf_dir, monkeypatch,
+                                               query, fail):
+    """A query that overlaps prepare() with init (or with audits) must
+    release every prepared handle when a step raises: a handle that
+    never reached apply is released by the query's with block, and
+    apply releases the ones it consumed."""
+    from proof_of_concept___cdc_w_iceberg_spark.cdc import (
+        branches, bucketed, queries,
+    )
+
+    class Injected(RuntimeError):
         pass
+
+    def boom(*args, **kwargs):
+        raise Injected(fail)
+
+    if fail == "init":
+        monkeypatch.setattr(bucketed.BucketedMirror, "init", boom)
+        monkeypatch.setattr(branches.BranchedMirror, "init", boom)
+    else:
+        audit = branches.wap_audit
+
+        def failing_bad_leg(state, keys, batch_keys=None):
+            if batch_keys is None:  # the poisoned leg's audit
+                raise Injected(fail)
+            return audit(state, keys, batch_keys)
+
+        monkeypatch.setattr(branches, "wap_audit", failing_bad_leg)
+
+    before = _persistent_ids(spark)
+    with pytest.raises(Injected):
+        getattr(queries, query)(spark, sf_dir)
+    assert not (_persistent_ids(spark) - before), query
